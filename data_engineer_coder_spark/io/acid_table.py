@@ -432,9 +432,20 @@ _PA_TYPE_BY_SPARK = {
 _SAFE_PART_VAL = re.compile(r"^[A-Za-z0-9_.\-]+$")
 
 
+def _local_part_val(v) -> bool:
+    """True when ``v`` names its hive partition dir exactly as Spark's
+    writer would: a non-bool int or a plain string.  ``None`` (Spark:
+    ``__HIVE_DEFAULT_PARTITION__``), bools (``true``) and floats take
+    the Spark path."""
+    return (
+        isinstance(v, str) or (isinstance(v, int) and not isinstance(v, bool))
+    ) and bool(_SAFE_PART_VAL.match(str(v)))
+
+
 def _rows_local_plan(schema, partition_cols: list[str]):
-    """(data_fields, part_idx, pa_schema) when the row set is writable
-    driver-side, else None (caller falls back to the Spark path)."""
+    """(schema, data_fields, part_idx, pa_schema) when the row set is
+    writable driver-side, else None (caller falls back to the Spark
+    path)."""
     import pyarrow as pa
 
     from pyspark.sql.types import StructType
@@ -471,10 +482,8 @@ def _commit_rows_local(
     import pyarrow.parquet as pq
 
     plan = _rows_local_plan(schema, partition_cols)
-    fallback_vals = plan is None or any(
-        not _SAFE_PART_VAL.match(str(r[i]))
-        for r in rows
-        for i in (plan[2] if plan else [])
+    fallback_vals = plan is None or not all(
+        _local_part_val(r[i]) for r in rows for i in plan[2]
     )
     if fallback_vals:
         df = spark.createDataFrame(rows, schema)

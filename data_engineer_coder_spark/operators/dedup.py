@@ -404,34 +404,42 @@ def shingle_hashes(docs: DataFrame) -> DataFrame:
     return sh.select("doc_id", h)
 
 
+# The family's wide expressions as SQL text, parsed by one F.expr call
+# each: built from F.col/F.lit pieces they cost one py4j round-trip per
+# node (hundreds per expression, ~0.1-0.3 s per call on a streaming
+# epoch's driver thread).  Types are unchanged: the permutation
+# constants are INT literals either way, h is BIGINT.
+_MINHASH_AGGS = [
+    f"min(pmod({a} * h + {b}, {_MERSENNE})) AS m{j}"
+    for j, (a, b) in enumerate(zip(_PERM_A, _PERM_B))
+]
+_BAND_KEYS_SQL = "array({})".format(", ".join(
+    "concat_ws('_', '{}', {})".format(
+        band,
+        ", ".join(f"CAST(m{band * _ROWS + r} AS STRING)" for r in range(_ROWS)),
+    )
+    for band in range(_BANDS)
+))
+
+
 def minhash_from_hashes(hashed: DataFrame) -> DataFrame:
     """Wide signature frame from a ``(doc_id, h)`` hash stream — split
     from :func:`minhash_signatures` so callers can filter the hash
     stream first (the df-capped ingest gate)."""
-    return hashed.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.pmod(F.lit(_PERM_A[j]) * F.col("h") + F.lit(_PERM_B[j]), F.lit(_MERSENNE))
-            ).alias(f"m{j}")
-            for j in range(_K)
-        ]
-    )
+    return hashed.groupBy("doc_id").agg(*[F.expr(a) for a in _MINHASH_AGGS])
 
 
 def band_key_array() -> "F.Column":
     """The 8 LSH band-key strings (``band_idx ++ '_' ++ 4 minima``) as an
     array column over a wide signature frame — the exact key format the
     batch LSH search and its oracle use (``minhash_lsh_neardup``)."""
-    return F.array(
-        *[
-            F.concat_ws(
-                "_",
-                F.lit(str(band)),
-                *[F.col(f"m{band * _ROWS + r}").cast("string") for r in range(_ROWS)],
-            )
-            for band in range(_BANDS)
-        ]
-    )
+    return F.expr(_BAND_KEYS_SQL)
+
+
+def agree_count(a: str, b: str) -> "F.Column":
+    """Number of matching minima between two aliased wide signature
+    frames ``a`` and ``b`` (INT)."""
+    return F.expr(" + ".join(f"CAST({a}.m{j} = {b}.m{j} AS INT)" for j in range(_K)))
 
 
 def _minhash_prep(spark: SparkSession, sf_dir: str):
@@ -458,16 +466,7 @@ def _minhash_prep(spark: SparkSession, sf_dir: str):
     h = F.pmod(
         F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("long"), F.lit(2**31)
     ).alias("h")
-    hashed = sh.select("doc_id", h)
-    sig = hashed.groupBy("doc_id").agg(
-        *[
-            F.min(F.pmod(F.lit(_PERM_A[j]) * F.col("h") + F.lit(_PERM_B[j]), F.lit(_MERSENNE))).alias(
-                f"m{j}"
-            )
-            for j in range(_K)
-        ]
-    )
-    return w, sh, sig
+    return w, sh, minhash_from_hashes(sh.select("doc_id", h))
 
 
 @register(
@@ -2061,10 +2060,7 @@ def minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_lsh_neardup(spark, sf_dir)
     sa = sig.alias("sa")
     sb = sig.alias("sb")
-    matches = sum(
-        F.when(F.col(f"sa.m{j}") == F.col(f"sb.m{j}"), 1).otherwise(0)
-        for j in range(_K)
-    )
+    matches = agree_count("sa", "sb")
     unit = 10**6 // _K
     jac_e6 = F.floor(F.col("jaccard") * 1e6).cast("bigint")
     return (

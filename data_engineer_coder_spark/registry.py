@@ -105,6 +105,30 @@ _FORCE_RECHECK: tuple[str, ...] = (
     # changed post-green, so re-prove the two verdict-named gates.
     "hybrid_served_recall_check",
     "retrieval_rank_metrics_served",
+    # round 15 cohort (never force-rechecked after their r15 changes):
+    # the covariance Gram kernel, the fused per-epoch aggregates and the
+    # driver-side ledger commits.
+    "embedding_covariance_topk",
+    "retrieval_lifecycle_audit",
+    "rag_chunk_pipeline",
+    "stream_neardup_ingest",
+    "stream_decontaminate_ingest",
+    "stream_ann_index_ingest",
+    "stream_curation_ingest",
+    # the MinHash family's signature aggregates, band keys and
+    # agreement counts are now parsed from SQL text (operators/dedup.py)
+    # — every query that reaches minhash_from_hashes, band_key_array,
+    # _minhash_prep or the gates' _neardup_screen and is not listed
+    # above.
+    "minhash_lsh_neardup",
+    "minhash_lsh_recall_check",
+    "minhash_estimate_audit",
+    "dedup_clusters_minhash",
+    "quality_dup_interaction",
+    "stream_neardup_ingest_capped",
+    "stream_neardup_ingest_cms",
+    "stream_neardup_probe_prune_audit",
+    "stream_neardup_index_compaction_audit",
 )
 
 # (The round-3/4 _CHECK_FIRST backlog queue is gone: every registered query

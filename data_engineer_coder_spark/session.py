@@ -86,6 +86,14 @@ def get_spark(
         "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing "
         "-XX:-DontCompileHugeMethods",
     )
+    # Generated-class cache: the 100-entry default is smaller than the
+    # working set of one pass over a dozen registry queries (~330
+    # classes) or one streaming-gate epoch, so every repeat recompiled
+    # through Janino inside its tasks (~3 s of a 20 s pass over sf0.01
+    # on 4 cores).  4096 holds the engine's working set; the JIT code
+    # those classes grow into is what the 1g code cache above reserves
+    # room for.
+    builder = builder.config("spark.sql.codegen.cache.maxEntries", "4096")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

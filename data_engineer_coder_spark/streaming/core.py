@@ -420,18 +420,10 @@ def _neardup_screen(
     from pyspark.sql import functions as F
 
     from ..io.acid_table import manifest_at, read_table
-    from ..operators.dedup import _K, band_key_array
+    from ..operators.dedup import _K, agree_count, band_key_array
 
     mcols = [f"m{j}" for j in range(_K)]
-
-    def _agree(a: str, b: str):
-        # number of matching minima between two aliased wide sig frames
-        s = None
-        for c in mcols:
-            term = (F.col(f"{a}.{c}") == F.col(f"{b}.{c}")).cast("int")
-            s = term if s is None else s + term
-        return s
-
+    near = agree_count("a", "b") >= F.lit(min_agree)
     bands = sig.select("doc_id", F.explode(band_key_array()).alias("band_key"))
 
     rej_index = None
@@ -492,7 +484,7 @@ def _neardup_screen(
                         index_sig.alias("b"),
                         F.col("idx_id") == F.col("b.doc_id"),
                     )
-                    .where(_agree("a", "b") >= F.lit(min_agree))
+                    .where(near)
                     .select("a.doc_id")
                     .distinct()
                     # tiny id list, referenced 3× (count, anti-join,
@@ -510,7 +502,7 @@ def _neardup_screen(
     rej_batch = (
         cand_b.join(sig.alias("a"), "doc_id")
         .join(sig.alias("b"), F.col("prior_id") == F.col("b.doc_id"))
-        .where(_agree("a", "b") >= F.lit(min_agree))
+        .where(near)
         .select("a.doc_id")
         .distinct()
         .localCheckpoint()

@@ -8,16 +8,21 @@
 #   1. full pytest          (operator semantics + plan shapes + parity @ sf0.001)
 #   2. full oracle sweep    (every registered query vs DuckDB @ sf0.01 — driver scale)
 #   3. bench                (must exit 0 and print its JSON line)
+#   4. perfbench self-test  (seed determinism, tracer restore, every
+#                            BENCHMARK.json metric printed with its unit)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== preflight 1/3: pytest =="
+echo "== preflight 1/4: pytest =="
 python -m pytest tests/ -q
 
-echo "== preflight 2/3: full oracle sweep @ sf0.01 =="
+echo "== preflight 2/4: full oracle sweep @ sf0.01 =="
 python scripts/check_oracle.py /root/testdata/sf0.01
 
-echo "== preflight 3/3: bench =="
+echo "== preflight 3/4: bench =="
 python bench.py
+
+echo "== preflight 4/4: perfbench self-test =="
+python3 perfbench/selftest.py
 
 echo "== preflight OK =="

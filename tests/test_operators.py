@@ -132,3 +132,52 @@ def test_ivf_kmeans_recall_at_least_matches_fixed_centroids(spark, sf_dir):
     total = sum(len(s) for s in exact.values())
     hits = sum(len(km.get(p, set()) & s) for p, s in exact.items())
     assert hits / total > 0.5, f"k-means IVF recall@3 too low: {hits}/{total}"
+
+
+def test_minhash_exprs_match_python(spark):
+    """The MinHash family's SQL-text expressions (signature aggregates,
+    LSH band keys, agreement count) equal a pure-Python replay of the
+    ``_PERM_A``/``_PERM_B`` permutations bit for bit, with the column
+    types the standing index tables were written with."""
+    from pyspark.sql import functions as F
+
+    from data_engineer_coder_spark.operators import dedup as d
+
+    hashes = {
+        1: [0, 7, 2**31 - 1, 123456789],
+        2: [0, 7, 2**31 - 2, 987654321],
+        3: [5],
+    }
+    hashed = spark.createDataFrame(
+        [(i, h) for i, hs in hashes.items() for h in hs], "doc_id long, h long"
+    )
+    sig = d.minhash_from_hashes(hashed)
+    want = {
+        i: [min((a * h + b) % d._MERSENNE for h in hs) for a, b in zip(d._PERM_A, d._PERM_B)]
+        for i, hs in hashes.items()
+    }
+    rows = sig.collect()
+    assert {r["doc_id"]: [r[f"m{j}"] for j in range(d._K)] for r in rows} == want
+    assert all(sig.schema[f"m{j}"].dataType.typeName() == "long" for j in range(d._K))
+
+    keys = sig.select("doc_id", d.band_key_array().alias("k"))
+    assert keys.schema["k"].dataType.simpleString() == "array<string>"
+    assert {r["doc_id"]: r["k"] for r in keys.collect()} == {
+        i: [
+            "_".join([str(band)] + [str(m[band * d._ROWS + r]) for r in range(d._ROWS)])
+            for band in range(d._BANDS)
+        ]
+        for i, m in want.items()
+    }
+
+    pairs = (
+        sig.alias("a")
+        .join(sig.alias("b"), F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id").alias("x"), F.col("b.doc_id").alias("y"),
+                d.agree_count("a", "b").alias("n"))
+    )
+    assert pairs.schema["n"].dataType.typeName() == "integer"
+    assert {(r["x"], r["y"]): r["n"] for r in pairs.collect()} == {
+        (x, y): sum(p == q for p, q in zip(want[x], want[y]))
+        for x in want for y in want if x < y
+    }

@@ -92,6 +92,28 @@ def test_append_rows_falls_back_on_unsafe_values(spark, tmp_path):
     assert [(r["k"], int(r["n"])) for r in rows] == [("a b", 1)]
 
 
+@pytest.mark.parametrize(
+    "ddl, vals",
+    [
+        ("k int, n long", [None, 3, -1]),
+        ("k boolean, n long", [True, False, None]),
+        ("k string, n long", ["a", None, "7"]),
+    ],
+)
+def test_append_rows_partition_keys_match_spark(spark, tmp_path, ddl, vals):
+    """``None`` and bools need Spark's spelling of the partition dir
+    (``__HIVE_DEFAULT_PARTITION__``, ``true``), not ``str()``'s: the
+    driver-side commit and the Spark write give the same keys."""
+    a = str(tmp_path / "local")
+    b = str(tmp_path / "sparkw")
+    for i, v in enumerate(vals):
+        append_rows(spark, [(v, i)], ddl, a, ["k"], f"t{i}")
+        append_partitions(spark.createDataFrame([(v, i)], ddl), b, ["k"], f"t{i}")
+    assert sorted(current_manifest(a)["partitions"]) == sorted(
+        current_manifest(b)["partitions"]
+    )
+
+
 def test_append_rows_crash_before_commit_is_invisible(spark, tmp_path):
     root = str(tmp_path / "crash")
 
